@@ -18,9 +18,10 @@ Jobs:
                     parquet, optional --regroup level
     scaling         the two-parallelism scaling job (see BENCH/scaling.py)
 
-Every stage checkpoints through hexscape_spark.checkpoint (per-partition
+Every stage checkpoints through hexscape_spark.checkpoint (per-part-file
 lineage + row/byte metrics in _lineage.json); re-running with --resume and
-unchanged params reuses finished stages instead of recomputing.
+unchanged params reuses finished stages instead of recomputing.  Reported
+row counts come from the written files' Parquet footers.
 """
 
 from __future__ import annotations
@@ -46,6 +47,13 @@ def build_zip(out_dir: str = "dist") -> str:
     return zip_path
 
 
+def written_rows(path: str) -> int:
+    """Rows of a Parquet output, from its footers (no Spark job)."""
+    from .checkpoint import parquet_rows
+
+    return sum(parquet_rows(path).values())
+
+
 def job_cell_rollup(spark, args) -> None:
     from pyspark.sql import functions as F
     from . import hexgrid
@@ -67,7 +75,7 @@ def job_cell_rollup(spark, args) -> None:
         F.sum("n_chars").alias("sum_chars"))
     cells.write.mode("overwrite").parquet(args.out)
     print(json.dumps({"job": "cell_rollup",
-                      "cells": spark.read.parquet(args.out).count()}))
+                      "cells": written_rows(args.out)}))
 
 
 def job_patches(spark, args) -> None:
@@ -81,7 +89,7 @@ def job_patches(spark, args) -> None:
                          land_use=land_use_square(args.size / 50.0))
     p.write.mode("overwrite").parquet(args.out)
     print(json.dumps({"job": "patches",
-                      "patches": spark.read.parquet(args.out).count()}))
+                      "patches": written_rows(args.out)}))
 
 
 def job_neighbours(spark, args) -> None:
@@ -95,7 +103,7 @@ def job_neighbours(spark, args) -> None:
     nb = generate_neighbours(p, land, hex_width=args.hex_width)
     nb.write.mode("overwrite").parquet(args.out)
     print(json.dumps({"job": "neighbours",
-                      "edges": spark.read.parquet(args.out).count()}))
+                      "edges": written_rows(args.out)}))
 
 
 def job_dedup(spark, args) -> None:
@@ -114,7 +122,7 @@ def job_dedup(spark, args) -> None:
                               max_bucket=args.max_bucket or None)
     pairs.write.mode("overwrite").parquet(args.out)
     print(json.dumps({"job": "dedup",
-                      "pairs": spark.read.parquet(args.out).count()}))
+                      "pairs": written_rows(args.out)}))
 
 
 def job_webtext(spark, args) -> None:
@@ -191,7 +199,7 @@ def job_webtext(spark, args) -> None:
     clean.write.mode("overwrite").parquet(args.out)
     n_in = docs.count()
     docs.unpersist()
-    n_out = spark.read.parquet(args.out).count()
+    n_out = written_rows(args.out)
     print(json.dumps({"job": "webtext", "records_in": n_in,
                       "docs_out": n_out}))
 
@@ -213,8 +221,8 @@ def job_landcover(spark, args) -> None:
     res["dissolved"].write.mode("overwrite").parquet(args.out + "_dissolved")
     print(json.dumps({
         "job": "landcover",
-        "cells": spark.read.parquet(args.out).count(),
-        "dissolved": spark.read.parquet(args.out + "_dissolved").count()}))
+        "cells": written_rows(args.out),
+        "dissolved": written_rows(args.out + "_dissolved")}))
 
 
 def main(argv: list[str] | None = None) -> None:

@@ -55,6 +55,11 @@ def _canonical_order(polys: list[list[np.ndarray]]
     return sorted(polys, key=key)
 
 
+def _decode(wkbs) -> list[list[np.ndarray]]:
+    """All polygons of a column of (multi)polygon WKB values."""
+    return [p for w in wkbs for p in geo.wkb_to_polygons(bytes(w))]
+
+
 def _union_or_fallback(polys: list[list[np.ndarray]], tol: float | None = None
                        ) -> tuple[list[list[np.ndarray]], int, float, bool]:
     """(union pieces, n_components, exact area, traced?) for one group.
@@ -142,23 +147,27 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
 
     Fixed-latency budget (VERDICT r04 #1 — the r4 form ran ~6 planning
     jobs per call, pure scheduler overhead on small inputs): the sub-salt
-    decision is now a LAZY in-DAG broadcast join (scalar-agg threshold via
-    crossJoin — no stats collect), heavy-vs-flat routing happens INSIDE
-    the merge UDF from the bytes it already holds (no per-key agg, no
-    isEmpty), and `bounds` lets callers that know the dataset extent
-    (catalog metadata, a fixed CRS window) skip the extent job.  dissolve()
-    therefore runs exactly ONE eager job (the level-1 checkpoint; two if
-    the extent must be measured) before returning the lazy 3-stage merge
-    plan — whose stages are pass-through for keys under `tree_bytes`.
+    decision is a LAZY in-DAG broadcast join (scalar-agg threshold via
+    crossJoin — no stats collect), and `bounds` lets callers that know the
+    dataset extent (catalog metadata, a fixed CRS window) skip the extent
+    job.  The level-2 route is decided by ONE scalar aggregate over the
+    materialised level-1 partials: a key is HEAVY when its partial
+    boundaries hold more than `tree_bytes` WKB bytes and there is more
+    than one of them.  No heavy key -> one grouped-map finishes every key
+    (the flat union); every key heavy -> the 3-stage component-parallel
+    merge; a mix -> both, split by a broadcast anti/semi join on the heavy
+    keys.  dissolve() therefore runs two eager jobs (level-1 checkpoint,
+    routing aggregate; three if the extent must be measured) before
+    returning the lazy merge plan.  Measured at local[4]: the sf0.1
+    dissolve_layers query and the ~170-rectangle landcover extract have
+    no heavy key, so their merge is one grouped-map and one exchange
+    instead of three of each.
     """
     l1_schema = f"{key} STRING, __salt LONG, geom_wkb BINARY"
 
     def pre_union(pdf: pd.DataFrame) -> pd.DataFrame:
-        polys: list[list[np.ndarray]] = []
-        for w in pdf[geom]:
-            polys.extend(geo.wkb_to_polygons(bytes(w)))
         # raw source polygons: exact distance==0 merge criterion (tol=0)
-        pieces, _, _, _ = _union_or_fallback(polys, tol=0.0)
+        pieces, _, _, _ = _union_or_fallback(_decode(pdf[geom]), tol=0.0)
         return pd.DataFrame({
             key: [pdf[key].iloc[0]],
             "__salt": [int(pdf["__salt"].iloc[0])],
@@ -261,71 +270,56 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
     if cached is not None:
         cached.unpersist()
 
-    # COMPONENT-PARALLEL final merge (VERDICT r03 #4, mechanism revised on
-    # measurement): the ~10 s serial bound of the one-task-per-key final
-    # merge is trace cost, which decomposes EXACTLY over the union's
-    # touch/overlap-connected components — independent regions that never
-    # share boundary.  A log-round salt tree (the prescribed mechanism)
-    # was built and measured first: it made the 6k jagged-cluster case
-    # SLOWER (33 s vs 25 s end-to-end), because partials there overlap
-    # only at seams, so every round re-traces the same growing boundary.
-    # Instead: split each key's partials into components (cheap bbox-grid
-    # + pairwise-distance pass), trace EACH COMPONENT IN ITS OWN TASK,
-    # then concatenate per key.  The per-task bound drops from
-    # sum-over-components to the largest single component, and the output
-    # bytes are IDENTICAL to the flat path (same canonical order, same
-    # per-component unions, same concat order).
+    # ROUTING from the materialised level 1: one aggregate over the
+    # checkpointed partials finds the keys whose partial boundaries exceed
+    # `tree_bytes` (and that have more than one partial to merge).  Every
+    # other key finishes in ONE grouped-map — the flat single-task union —
+    # so the common all-flat case crosses the Arrow/Python boundary once
+    # after level 1 instead of three times.
     #
-    # Routing is decided INSIDE stage 1 (VERDICT r04 #1): the grouped-map
-    # already holds each key's partial boundaries, so "is this key over
-    # tree_bytes?" is a len() over bytes it was handed — no per-key agg
-    # job, no isEmpty, no plan branch.  A key under `tree_bytes` does the
-    # FULL final union in stage 1 and rides stages 2-3 as a pass-through
-    # row (__comp = -1); a heavy key emits one row per component.  The
-    # pass-through shuffle volume is bounded: a small key's finished
-    # boundary is <= tree_bytes by definition, heavy keys shuffle their
-    # components in either design.
-    stage_schema = (f"{key} STRING, __comp LONG, geom_wkb BINARY, "
-                    "area DOUBLE, n_parts INT")
+    # A heavy key takes the COMPONENT-PARALLEL final merge (VERDICT r03
+    # #4, mechanism revised on measurement): the ~10 s serial bound of the
+    # one-task-per-key final merge is trace cost, which decomposes EXACTLY
+    # over the union's touch/overlap-connected components — independent
+    # regions that never share boundary.  A log-round salt tree (the
+    # prescribed mechanism) was built and measured first: it made the 6k
+    # jagged-cluster case SLOWER (33 s vs 25 s end-to-end), because
+    # partials there overlap only at seams, so every round re-traces the
+    # same growing boundary.  Instead: split each heavy key's partials into
+    # components (cheap bbox-grid + pairwise-distance pass), trace EACH
+    # COMPONENT IN ITS OWN TASK, then concatenate per key.  The per-task
+    # bound drops from sum-over-components to the largest single
+    # component, and the output bytes are IDENTICAL to the flat path (same
+    # canonical order, same per-component unions, same concat order).
     out_schema = f"{key} STRING, geom_wkb BINARY, area DOUBLE, n_parts INT"
+    split_schema = f"{key} STRING, __comp LONG, geom_wkb BINARY"
+    comp_schema = split_schema + ", area DOUBLE"
 
-    def merge_or_split(pdf: pd.DataFrame) -> pd.DataFrame:
-        wkbs = [bytes(w) for w in pdf["geom_wkb"]]
-        polys: list[list[np.ndarray]] = []
-        for w in wkbs:
-            polys.extend(geo.wkb_to_polygons(w))
-        if sum(len(w) for w in wkbs) <= tree_bytes or len(wkbs) <= 1:
-            # flat path: finish the key here, tag as done (__comp = -1)
-            pieces, n_comps, area, _ = _union_or_fallback(polys)
-            if simplify_keep is not None:
-                pieces = geo.simplify_polygons_keep(pieces, simplify_keep)
-            return pd.DataFrame({
-                key: [pdf[key].iloc[0]], "__comp": [-1],
-                "geom_wkb": [geo.multipolygon_to_wkb(pieces)],
-                "area": [area], "n_parts": [n_comps],
-            })
-        polys = _canonical_order(polys)
-        comps = geo.overlap_components(polys)      # traced partials: snap
-        if not comps:
-            # all-empty geometry: emit the finished (key, empty, 0.0, 0)
-            # row the flat path would produce (r4 review)
-            return pd.DataFrame({
-                key: [pdf[key].iloc[0]], "__comp": [-1],
-                "geom_wkb": [geo.multipolygon_to_wkb([])],
-                "area": [0.0], "n_parts": [0],
-            })
+    def finish(k, pieces, area, n_parts):
+        if simplify_keep is not None:
+            pieces = geo.simplify_polygons_keep(pieces, simplify_keep)
+        return pd.DataFrame({
+            key: [k], "geom_wkb": [geo.multipolygon_to_wkb(pieces)],
+            "area": [area], "n_parts": [n_parts],
+        })
+
+    def merge_flat(pdf: pd.DataFrame) -> pd.DataFrame:
+        pieces, n_comps, area, _ = _union_or_fallback(_decode(pdf["geom_wkb"]))
+        return finish(pdf[key].iloc[0], pieces, area, n_comps)
+
+    def split_components(pdf: pd.DataFrame) -> pd.DataFrame:
+        polys = _canonical_order(_decode(pdf["geom_wkb"]))
+        # traced partials: default snap; an all-empty key becomes one empty
+        # component, which finishes as the flat path's (key, empty, 0.0, 0)
+        comps = geo.overlap_components(polys) or [[]]
         return pd.DataFrame({
             key: [pdf[key].iloc[0]] * len(comps),
             "__comp": list(range(len(comps))),
             "geom_wkb": [geo.multipolygon_to_wkb([polys[i] for i in comp])
                          for comp in comps],
-            "area": [None] * len(comps),
-            "n_parts": [None] * len(comps),
         })
 
     def union_one_component(pdf: pd.DataFrame) -> pd.DataFrame:
-        if int(pdf["__comp"].iloc[0]) < 0:
-            return pdf                             # finished key: pass
         # exactly the per-component body of _union_or_fallback
         sub = geo.wkb_to_polygons(bytes(pdf["geom_wkb"].iloc[0]))
         if not sub:
@@ -341,12 +335,9 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
             "__comp": [int(pdf["__comp"].iloc[0])],
             "geom_wkb": [geo.multipolygon_to_wkb(merged)],
             "area": [area],
-            "n_parts": [None],
         })
 
     def concat_components(pdf: pd.DataFrame) -> pd.DataFrame:
-        if int(pdf["__comp"].iloc[0]) < 0:         # finished key (1 row)
-            return pdf.drop(columns="__comp")
         pdf = pdf.sort_values("__comp")            # flat-path piece order
         pieces: list[list[np.ndarray]] = []
         area = 0.0
@@ -357,18 +348,29 @@ def dissolve(df: DataFrame, key: str = "clc", geom: str = "geom_wkb",
                 n_parts += 1                       # non-empty components
             pieces.extend(ps)
             area += float(a)                       # flat-path sum order
-        if simplify_keep is not None:
-            pieces = geo.simplify_polygons_keep(pieces, simplify_keep)
-        return pd.DataFrame({
-            key: [pdf[key].iloc[0]],
-            "geom_wkb": [geo.multipolygon_to_wkb(pieces)],
-            "area": [area],
-            "n_parts": [n_parts],
-        })
+        return finish(pdf[key].iloc[0], pieces, area, n_parts)
 
-    staged = partial.groupBy(key).applyInPandas(merge_or_split,
-                                               schema=stage_schema)
-    unioned = staged.groupBy(key, "__comp").applyInPandas(
-        union_one_component, schema=stage_schema)
-    return unioned.groupBy(key).applyInPandas(concat_components,
-                                              schema=out_schema)
+    def flat(parts: DataFrame) -> DataFrame:
+        return parts.groupBy(key).applyInPandas(merge_flat, schema=out_schema)
+
+    def component_parallel(parts: DataFrame) -> DataFrame:
+        return (parts.groupBy(key)
+                .applyInPandas(split_components, schema=split_schema)
+                .groupBy(key, "__comp")
+                .applyInPandas(union_one_component, schema=comp_schema)
+                .groupBy(key)
+                .applyInPandas(concat_components, schema=out_schema))
+
+    per_key = partial.groupBy(key).agg(
+        ((F.sum(F.length("geom_wkb")) > tree_bytes)
+         & (F.count(F.lit(1)) > 1)).alias("__heavy"))
+    n_keys, n_heavy = per_key.agg(
+        F.count(F.lit(1)),
+        F.coalesce(F.sum(F.col("__heavy").cast("long")), F.lit(0))).first()
+    if n_heavy == 0:
+        return flat(partial)
+    if n_heavy == n_keys:
+        return component_parallel(partial)
+    heavy_keys = F.broadcast(per_key.where("__heavy").select(key))
+    return flat(partial.join(heavy_keys, key, "left_anti")).unionByName(
+        component_parallel(partial.join(heavy_keys, key, "left_semi")))

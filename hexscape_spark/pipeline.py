@@ -13,9 +13,14 @@ label join.  Engine form:
   5. J10 coverage gap: MISSING_CC area per cell = mask-cell area minus the
      sum of covered areas (the relational form of
      st_difference(mask, st_union(corine)), R/extract_corine.R:177-205);
-  6. A2 dissolve per code for geometry output;
+  6. A2 dissolve per code for geometry output, plus the coverage-gap
+     geometry row;
   7. J1 broadcast label join;
-  8. R8 checkpoints with lineage + resume at the cover and rollup stages.
+  8. R8 checkpoints with lineage + resume at three stages: the cover
+     (`lc_cover`), the per-cell rollup (`lc_cells`) and the dissolved
+     geometry (`lc_dissolved`).  The two mask-dependent stages carry an
+     md5 of the mask WKB in their fingerprint, so a resume against another
+     mask recomputes them.
 
 Assumes land-cover features are disjoint and lie within the mask (true of
 CORINE land-cover partitions; asserted by the Σ==mask-area invariant test).
@@ -23,9 +28,12 @@ CORINE land-cover partitions; asserted by the Σ==mask-area invariant test).
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import geo
 from . import params as P
 from .checkpoint import checkpoint
 from .cover import polygon_cell_cover
@@ -42,7 +50,6 @@ def _regroup_fingerprint(regroup: "int | DataFrame | None"):
     computed under another mapping)."""
     if regroup is None or isinstance(regroup, int):
         return regroup
-    import hashlib
     rows = sorted((str(r[0]), str(r[1]))
                   for r in regroup.select("clc", "clc_group").collect())
     return "map:" + hashlib.md5(repr(rows).encode("utf-8")).hexdigest()
@@ -119,9 +126,22 @@ def extract_landcover(spark: SparkSession, landcover: DataFrame,
                       resume: bool = True) -> dict[str, DataFrame]:
     """landcover: DataFrame(poly_id LONG, clc STRING, geom_wkb BINARY).
     Returns {"cells": per-(cell, clc) areas incl. MISSING_CC rows,
-             "dissolved": per-clc union geometry + area (+labels)}."""
+             "dissolved": per-clc union geometry + area (+labels),
+             "plan": per-clc feature counts}.
+
+    With `checkpoint_root`, three stages are resumable checkpoints:
+    `lc_cover` (keyed by hex_width, clc_filter, regroup), and `lc_cells`
+    and `lc_dissolved` (both also keyed by an md5 of the mask WKB; cells
+    by hex_width too).  `resume=True` reuses every stage whose fingerprint
+    matches, so on a finished root it runs no dissolve, no cover and no
+    Python worker; `resume=False` rewrites all three."""
     mode = "reuse" if resume else "overwrite"
-    regroup_fp = _regroup_fingerprint(regroup) if checkpoint_root else None
+    mask_bytes = bytes(mask_wkb)
+    if checkpoint_root:
+        params = {"clc_filter": clc_filter,
+                  "regroup": _regroup_fingerprint(regroup)}
+        mask_params = {**params,
+                       "mask": hashlib.md5(mask_bytes).hexdigest()}
 
     # 1. pushdown-friendly filter + projection
     lc = landcover.select("poly_id", "clc", "geom_wkb")
@@ -146,9 +166,7 @@ def extract_landcover(spark: SparkSession, landcover: DataFrame,
         .select("cell_id", "q", "r", F.col("cover_area").alias("mask_area"))
     if checkpoint_root:
         cover = checkpoint(cover, checkpoint_root, "lc_cover",
-                           params={"hex_width": hex_width,
-                                   "clc_filter": clc_filter,
-                                   "regroup": regroup_fp},
+                           params={**params, "hex_width": hex_width},
                            mode=mode)
     else:
         # the gap computation reads the cover twice (per-cell sums + union);
@@ -170,24 +188,18 @@ def extract_landcover(spark: SparkSession, landcover: DataFrame,
              .join(mask_cover.select("cell_id", "q", "r", "mask_area"), "cell_id"))
     if checkpoint_root:
         cells = checkpoint(cells, checkpoint_root, "lc_cells",
-                           params={"hex_width": hex_width,
-                                   "clc_filter": clc_filter,
-                                   "regroup": regroup_fp},
+                           params={**mask_params, "hex_width": hex_width},
                            mode=mode)
 
-    # 6. dissolve per code + 7. broadcast label join.  The dissolved table
-    # also gains the reference's coverage-gap GEOMETRY row: MISSING_CC =
-    # st_difference(mask, st_union(all codes)) (R/extract_corine.R:177-205)
-    # — geo.difference_polygons over the per-code union boundaries, run as
+    # 6. dissolve per code.  The dissolved table also gains the reference's
+    # coverage-gap GEOMETRY row: MISSING_CC = st_difference(mask,
+    # st_union(all codes)) (R/extract_corine.R:177-205) —
+    # geo.difference_polygons over the per-code union boundaries, run as
     # a single grouped-map over the tiny dissolved table (one row per
     # code; the heavy lifting already happened in the two-level dissolve).
-    dis = dissolve(lc, key="clc")
-    mask_bytes = bytes(mask_wkb)
-
     def add_gap(batches):
         import pandas as pd
 
-        from . import geo
         parts = list(batches)
         cols = ["clc", "geom_wkb", "area", "n_parts"]
         pdf = (pd.concat(parts, ignore_index=True) if parts
@@ -219,9 +231,22 @@ def extract_landcover(spark: SparkSession, landcover: DataFrame,
         })
         yield pd.concat([pdf[row.columns], row], ignore_index=True)
 
-    dis = dis.repartition(1).mapInPandas(
-        add_gap, schema="clc STRING, geom_wkb BINARY, area DOUBLE, "
-                        "n_parts INT")
+    def dissolved() -> DataFrame:
+        # dissolve() runs eager jobs when called, so it is only called on
+        # the write path of the lc_dissolved checkpoint.  Features lie
+        # inside the mask, so the mask's bbox is a valid salt-grid extent
+        dis = dissolve(lc, key="clc", bounds=geo.polygons_bounds(
+            geo.wkb_to_polygons(mask_bytes)))
+        return dis.repartition(1).mapInPandas(
+            add_gap, schema="clc STRING, geom_wkb BINARY, area DOUBLE, "
+                            "n_parts INT")
+
+    if checkpoint_root:
+        dis = checkpoint(dissolved, checkpoint_root, "lc_dissolved",
+                         params=mask_params, mode=mode)
+    else:
+        dis = dissolved()
+    # 7. broadcast label join
     if clc_labels is not None:
         dis = dis.join(F.broadcast(clc_labels), "clc", "left")
 

@@ -82,6 +82,99 @@ def test_dissolve_true_union_of_overlapping_inputs(spark):
     assert d.loc["B"].n_parts == 2
 
 
+def _frames(res):
+    """A run's cells and dissolved outputs as key-sorted pandas frames."""
+    cells = res["cells"].toPandas().sort_values(["cell_id", "clc"]) \
+        .reset_index(drop=True)
+    dis = res["dissolved"].toPandas().sort_values("clc").reset_index(drop=True)
+    dis["geom_wkb"] = dis.geom_wkb.map(bytes)
+    return cells, dis
+
+
+def _assert_same_run(a, b):
+    (ca, da), (cb, db) = _frames(a), _frames(b)
+    assert ca[["cell_id", "clc", "q", "r"]].equals(cb[["cell_id", "clc", "q", "r"]])
+    assert ca.area.values == pytest.approx(cb.area.values, rel=1e-12)
+    assert ca.mask_area.values == pytest.approx(cb.mask_area.values, rel=1e-12)
+    assert da.drop(columns="area").equals(db.drop(columns="area"))
+    assert da.area.values == pytest.approx(db.area.values, rel=1e-12)
+
+
+def test_resume_with_another_mask_recomputes(spark, landcover, tmp_path):
+    """lc_cells and lc_dissolved depend on the mask: a resume against a
+    new mask must not reuse cells or a MISSING_CC gap built for the old
+    one — it equals a cold run with the new mask."""
+    mask_a = geo.rect_wkb(0, 0, 20000.0, 20000.0)
+    mask_b = geo.rect_wkb(0, 0, 24000.0, 22000.0)
+    root = str(tmp_path / "a")
+    extract_landcover(spark, landcover, mask_a, checkpoint_root=root,
+                      resume=False)
+    resumed = extract_landcover(spark, landcover, mask_b,
+                                checkpoint_root=root, resume=True)
+    cold = extract_landcover(spark, landcover, mask_b,
+                             checkpoint_root=str(tmp_path / "b"),
+                             resume=False)
+    _assert_same_run(resumed, cold)
+    gap = _frames(resumed)[1].set_index("clc").loc[MISSING_CC].area
+    assert gap == pytest.approx((24 * 22 - 294) * 1e6, rel=1e-9)
+
+
+def test_resume_on_finished_root_runs_no_dissolve(spark, landcover, tmp_path,
+                                                  monkeypatch):
+    """resume=True on a reusable root reads all three stages back: the
+    dissolve (and its eager jobs) never runs, and the outputs equal the
+    cold run's."""
+    from hexscape_spark import pipeline
+
+    mask = geo.rect_wkb(0, 0, 20000.0, 20000.0)
+    root = str(tmp_path)
+    cold = extract_landcover(spark, landcover, mask, checkpoint_root=root,
+                             resume=False)
+    cold_frames = _frames(cold)
+
+    def no_dissolve(*a, **k):
+        raise AssertionError("dissolve ran on a reusable checkpoint root")
+
+    monkeypatch.setattr(pipeline, "dissolve", no_dissolve)
+    resumed = extract_landcover(spark, landcover, mask, checkpoint_root=root,
+                                resume=True)
+    (cr, dr), (cc, dc) = _frames(resumed), cold_frames
+    assert cr.equals(cc) and dr.equals(dc)
+
+
+def test_dissolve_heavy_and_mixed_routes_match_flat(spark):
+    """The component-parallel route (all keys heavy, and a mix of heavy
+    and flat keys split by the routing aggregate) emits exactly the flat
+    route's geom_wkb bytes, area and n_parts for every key."""
+    import numpy as np
+    from hexscape_spark.dissolve import dissolve
+
+    rng = np.random.RandomState(11)
+    rows = []
+    for k, n in (("A", 80), ("B", 40)):
+        for _ in range(n):
+            x0, y0 = rng.uniform(0, 40, 2)
+            w, h = rng.uniform(1, 6, 2)
+            rows.append((k, bytearray(geo.rect_wkb(x0, y0, x0 + w, y0 + h))))
+    rows.append(("C", bytearray(geo.rect_wkb(50.0, 50.0, 52.0, 51.0))))
+    df = spark.createDataFrame(rows, "clc STRING, geom_wkb BINARY")
+
+    def run(frame, **kw):
+        d = dissolve(frame, **kw).toPandas().sort_values("clc") \
+            .reset_index(drop=True)
+        d["geom_wkb"] = d.geom_wkb.map(bytes)
+        return d
+
+    flat = run(df, tree_bytes=1 << 40)
+    assert list(flat.clc) == ["A", "B", "C"]
+    # tree_bytes=0: A and B (many partials) are heavy, C (one partial) flat
+    assert run(df, tree_bytes=0).equals(flat)
+    assert run(df, tree_bytes=0, simplify_keep=0.5).equals(
+        run(df, tree_bytes=1 << 40, simplify_keep=0.5))
+    # every key heavy: the component-parallel merge alone
+    assert run(df.where("clc != 'C'"), tree_bytes=0).equals(flat.iloc[:2])
+
+
 def test_regroup_landcover_levels_and_mapping(spark):
     """CLC regroup (R/load_corine.R:61-93): integer level -> digit prefix;
     mapping DataFrame -> re-key with unmapped passthrough; MISSING_CC rows

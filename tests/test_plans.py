@@ -139,9 +139,10 @@ def test_dissolve_plan_is_two_level(spark):
     """The dissolve plan stays two-level: the per-(key, salt) pre-union
     runs EAGERLY behind a localCheckpoint (so downstream actions never
     re-execute the raw-feature lineage — ADVICE r03 #5), and the returned
-    plan is the 3-stage merge (split-or-finish, per-component union,
-    concat) over that checkpoint — in-UDF routed, so there is no plan
-    branch, no per-key routing agg, and no isEmpty job (VERDICT r04 #1).
+    plan merges over that checkpoint only.  Level 2 is routed by one
+    aggregate over the checkpointed partials: flat keys finish in ONE live
+    grouped-map; a heavy key (forced here with tree_bytes=0) takes the
+    3-stage component-parallel merge (split, per-component union, concat).
     A hot key's raw features therefore never land in a single task: the
     merge grouped-maps read pre-unioned (key, salt) partials only."""
     from hexscape_spark import geo
@@ -149,13 +150,14 @@ def test_dissolve_plan_is_two_level(spark):
     rows = [("A", bytearray(geo.rect_wkb(float(i), 0.0, i + 1.5, 1.0)))
             for i in range(8)]
     df = spark.createDataFrame(rows, "clc STRING, geom_wkb BINARY")
-    out = dissolve(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the three merge stages are the only LIVE grouped-maps; their input
-    # is the checkpointed level-1 result, not the raw features
-    assert plan.count("FlatMapGroupsInPandas") == 3, plan
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
-    assert out.count() == 1
+    for tree_bytes, stages in ((1 << 40, 1), (0, 3)):
+        out = dissolve(df, tree_bytes=tree_bytes)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        # the merge stages are the only LIVE grouped-maps; their input is
+        # the checkpointed level-1 result, not the raw features
+        assert plan.count("FlatMapGroupsInPandas") == stages, plan
+        assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
+        assert out.count() == 1
 
 
 def test_nearest_cell_plan_broadcast_minstruct(spark):

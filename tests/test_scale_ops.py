@@ -265,6 +265,48 @@ def test_checkpoint_recovers_from_half_deleted_data(spark, tmp_path):
     assert read_manifest(root, "stage")["rows"] == 100
 
 
+def test_checkpoint_manifest_from_footers_and_part_file_loss(spark, tmp_path):
+    """The manifest's per-part-file row counts (read from the Parquet
+    footers) sum to `rows`; losing one part file makes reuse fall through
+    to a recompute instead of reading a short table."""
+    from hexscape_spark.checkpoint import checkpoint, parquet_rows, read_manifest
+    root = str(tmp_path)
+    df = spark.range(1000).repartition(4)
+    checkpoint(df, root, "stage", params={"n": 1000})
+    m = read_manifest(root, "stage")
+    data = str(tmp_path / "stage" / "data")
+    assert len(m["partitions"]) == 4
+    assert sum(m["partitions"].values()) == m["rows"] == 1000
+    assert m["partitions"] == parquet_rows(data)
+    assert m["bytes"] == sum(os.path.getsize(os.path.join(data, f))
+                             for f in m["partitions"])
+    os.remove(os.path.join(data, sorted(m["partitions"])[0]))
+    out = checkpoint(df, root, "stage", params={"n": 1000})
+    assert out.count() == 1000
+    m2 = read_manifest(root, "stage")
+    assert m2["rows"] == 1000 and m2["partitions"] == parquet_rows(data)
+
+
+def test_checkpoint_callable_and_mode_validation(spark, tmp_path):
+    """A callable `df` is built only on the write path; an unknown mode is
+    an error, not a silent overwrite."""
+    from hexscape_spark.checkpoint import checkpoint
+    root = str(tmp_path)
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.range(10)
+
+    assert checkpoint(build, root, "stage").count() == 10
+    assert checkpoint(build, root, "stage").count() == 10
+    assert len(built) == 1
+    assert checkpoint(build, root, "stage", mode="overwrite").count() == 10
+    assert len(built) == 2
+    with pytest.raises(ValueError, match="mode"):
+        checkpoint(build, root, "stage", mode="resume")
+
+
 def test_pip_join_matches_bruteforce(spark):
     """Exact PIP join (cover prefilter + refine) == brute-force PIP."""
     from hexscape_spark.cover import pip_join, polygon_cell_cover
