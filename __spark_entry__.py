@@ -11,7 +11,6 @@ bit-for-bit per the north rule.  Monetary aggregates are integerised
 from __future__ import annotations
 
 import math
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -685,10 +684,7 @@ def _q_lang_dist_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination_docs under the 50-entry cap)."""
     _views(spark, sf_dir)
     from hexscape_spark.textops import with_lang_guess
-    # r7 (guide §2.5): spread the single-row-group scan before the
-    # per-row marker scoring; counts and integer sums are partition-exact
-    return (with_lang_guess(spark.table("documents")
-                            .repartition(F.col("doc_id")))
+    return (with_lang_guess(spark.table("documents"))
             .groupBy("source", "lang", "lang_guess")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.sum("n_chars").alias("sum_chars")))
@@ -1032,19 +1028,18 @@ FROM bord WHERE border > {sqlgen._f(min_prop * hexlth)}
 
 
 def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, oracle-gated: the portable md5-folded
-    hash evaluates identically in DuckDB, so the oracle recomputes the
-    exact pair set (the xxhash64 production path is the same algorithm,
-    pytest-verified with planted duplicates)."""
+    """MinHash+LSH near-dup pairs, oracle-gated: the md5-folded hash
+    evaluates identically in DuckDB, so the oracle recomputes the exact
+    pair set."""
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import minhash_lsh_pairs_portable
-    return minhash_lsh_pairs_portable(spark.table("documents"),
-                                      num_hashes=16, bands=4)
+    from hexscape_spark.dedup import minhash_lsh_pairs
+    return minhash_lsh_pairs(spark.table("documents"),
+                             num_hashes=16, bands=4)
 
 
 def _sql_minhash_pairs_duck(num_hashes: int = 16, bands: int = 4,
                             k: int = 3) -> str:
-    """DuckDB mirror of minhash_lsh_pairs_portable (same md5-folded base,
+    """DuckDB mirror of dedup.minhash_lsh_pairs (same md5-folded base,
     same exact-int64 permutation mixing, same shingling and banding; list
     slices are 1-based inclusive)."""
     base = sqlgen.md5_int_expr("s")
@@ -1180,12 +1175,11 @@ WHERE rank <= 5
 
 
 def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dups over portable-LSH candidates —
+    """Exact n-gram Jaccard near-dups over MinHash-LSH candidates —
     oracle-gated end to end (banding + verify both reproduced in SQL)."""
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import ngram_jaccard_pairs_portable
-    return ngram_jaccard_pairs_portable(spark.table("documents"),
-                                        threshold=0.5)
+    from hexscape_spark.dedup import ngram_jaccard_pairs
+    return ngram_jaccard_pairs(spark.table("documents"), threshold=0.5)
 
 
 def _sql_ngram_jaccard_duck(threshold: float = 0.5, num_hashes: int = 16,
@@ -1529,8 +1523,8 @@ _SQL_SALTED = (
 
 def _q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir)
-    from hexscape_spark.dedup import with_simhash_portable
-    return with_simhash_portable(spark.table("documents"), bits=16)
+    from hexscape_spark.dedup import with_simhash
+    return with_simhash(spark.table("documents"), bits=16)
 
 
 def _sql_simhash_duck(bits: int = 16) -> str:
@@ -1899,58 +1893,6 @@ FROM ar JOIN np ON ar.clc = np.clc
 """
 
 
-def _sql_hex_nearest_cell_fast(k: int = 3) -> str:
-    """Spark-side plan for the J8 nearest join (VERDICT r03 #2 follow-up) —
-    the DuckDB oracle keeps the ROW_NUMBER form, this emits the same result
-    from a better physical plan.  Two defects of the r3 plan fixed:
-
-      * the occupied-cell side (a few hundred rows from a 5e5-row doc-assign
-        subquery) was misestimated and planned as a SORT-MERGE join, which
-        shuffled+sorted the full 37x candidate fan-out — an explicit
-        /*+ BROADCAST(occ) */ makes the candidate join a map-side hash probe;
-      * the per-event ROW_NUMBER window (shuffle + sort of every matched
-        candidate) is replaced by MIN(named_struct(dist, cell_id)) — struct
-        comparison is field-order lexicographic, so this IS "ORDER BY dist
-        ASC, cell_id ASC LIMIT 1" — as a hash aggregate with map-side
-        partial combine: shuffle volume drops from all-candidates to
-        one-row-per-event.
-
-    r4 follow-up, INVERTED fan-out: the r3 form cross-joined every EVENT
-    with the 37 offsets (a 37x row blow-up of the big side before the
-    probe).  Instead the tiny occupied-cell side expands by the offsets
-    (|occ| x 37 rows, still broadcast-sized) keyed by the shifted (q, r),
-    so each event does ONE hash probe and rows materialise only for
-    actually-occupied neighbour cells (~5-15 vs 37) — measured 2.2 s vs
-    2.7-3.4 s steady-state at sf0.1, exact parity.  At 100x the big side
-    never inflates at all; the broadcast grows by a constant 37x.
-
-    Ring escalation (join ring<=1 first, escalate the unproven remainder)
-    was measured too: with Catalyst re-inlining the event/doc assign CTEs
-    per stage it costs MORE here than the broadcast probe saves
-    (5.3 s vs 2.6 s at sf0.1); the escalating form lives in
-    knn.nearest_cells_escalating for persisted-input pipelines where the
-    fan-out term dominates (1000-executor regime), with fixture-parity
-    pinned in tests/test_hexgrid.py.
-    """
-    ev = sqlgen.assign_sql("events", "event_id")
-    docs = _docs_assign_sub()
-    cx, cy = sqlgen.centroid_exprs("expd.cq", "expd.cr")
-    dist = (f"SQRT((ev.lon - ({cx})) * (ev.lon - ({cx})) + "
-            f"(ev.lat - ({cy})) * (ev.lat - ({cy})))")
-    return (
-        f"WITH ev AS (SELECT event_id, lon, lat, q, r FROM ({ev}) AS e), "
-        f"occ AS (SELECT DISTINCT q AS cq, r AS cr, cell_id FROM ({docs}) AS d), "
-        f"offs AS (SELECT * FROM (VALUES {_kring_values(k)}) AS v(dq, dr)), "
-        "expd AS (SELECT occ.cq - offs.dq AS kq, occ.cr - offs.dr AS kr, "
-        " occ.cq AS cq, occ.cr AS cr, occ.cell_id AS cell_id "
-        " FROM occ JOIN offs ON 1=1), "
-        "best AS (SELECT /*+ BROADCAST(expd) */ ev.event_id, "
-        f" MIN(named_struct('d', {dist}, 'c', expd.cell_id)) AS b "
-        " FROM ev JOIN expd ON expd.kq = ev.q AND expd.kr = ev.r "
-        " GROUP BY ev.event_id) "
-        "SELECT event_id, b.c AS nn_cell_id, ROUND(b.d, 6) AS dist_r FROM best")
-
-
 def _assign_ckpt(spark: SparkSession, table: str, key: str,
                  select: str, distinct: bool = False,
                  spread: bool = True) -> DataFrame:
@@ -1983,52 +1925,51 @@ def _assign_ckpt(spark: SparkSession, table: str, key: str,
 
 
 def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast + min-struct path of the J8 nearest-feature join
-    (knn.nearest_cells semantics); bit-parity with the ROW_NUMBER shared-SQL
-    oracle is asserted in pytest as well.
+    """Broadcast kRing-candidate path of the J8 nearest-feature join
+    (knn.nearest_cells semantics; bit-parity with the ROW_NUMBER
+    shared-SQL oracle).  Below _NN_GATHER_MIN_EVENTS events the argmin is
+    _nn_struct_min_best, above it _nn_gather_best: MIN(struct) cannot
+    hash-aggregate (struct is not a mutable buffer type), so its plan
+    SORTS the whole event×candidate fan-out inside a partial
+    SortAggregate, while the gather form has no aggregate over the
+    fan-out but pays an array build and an interpreted fold that lose on
+    small inputs.  The count is a cheap job over the eager checkpoint;
+    tests/test_plans.py pins that both forms return the same rows."""
+    ev, expd = _nn_inputs(spark, sf_dir)
+    if ev.count() >= _NN_GATHER_MIN_EVENTS:
+        return _nn_gather_best(ev, expd)
+    return _nn_struct_min_best(ev, expd)
 
-    r7 (guide §1/§2.4): both assign sides are materialised via
-    _assign_ckpt (see there — the inner-join IsNotNull inference was
-    re-inlining the full assign expression tree into scan Filters on
-    BOTH sides, 21.1 s at sf1.0 for a query whose assign costs 1.4 s).
-    The tiny occupied side expands by the 37 kRing offsets WITH its
-    centroid precomputed per expanded row (once per occ×37, not once
-    per event×candidate), broadcasts, and each event makes one hash
-    probe feeding a combinable MIN(struct) — measured 21.1 s → ~3.5 s
-    at sf1.0, exceptAll-parity in both directions.
 
-    r7 follow-up, scale-adaptive argmin: MIN(struct) cannot
-    hash-aggregate (struct is not a mutable buffer type), so the
-    struct-min plan SORTS the full event×candidate fan-out inside the
-    partial SortAggregate.  Above _NN_GATHER_MIN_EVENTS the candidates
-    are instead pre-grouped per probe key into arrays on the broadcast
-    side and each event's winner is array_min(transform(...)) — same
-    lexicographic (d, cell_id) ordering, one row per event out of the
-    join, NO aggregate at all.  The fan-out sort disappears: measured
-    3.65 → 2.54 s at sf1.0 (1M events) and 2.42 → 1.92 s at 3× sf0.1,
-    but the array build + interpreted fold loses at sf0.1 (1.27 → 1.88 s
-    at 100k events), hence the measured-crossover gate (~200k events;
-    the count is a cheap job over the eager checkpoint).  exceptAll
-    parity in both directions at sf0.01, sf0.1 and a 1M-event replica;
-    the unconditional struct-min/array-gather equivalence is pinned in
-    tests/test_plans.py."""
+def _nn_inputs(spark: SparkSession,
+               sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the J8 nearest join.
+
+    `ev` is (event_id, lon, lat, q, r); `expd` is the occupied-cell set
+    expanded by the 37 offsets of the 3-disk, keyed by the probe cell
+    (kq, kr) that sees it, with each cell's centroid (cx, cy) computed
+    once per expanded row rather than once per event×candidate.  Both assign
+    sides are materialised via _assign_ckpt (see there: without it the
+    inner-join IsNotNull inference re-inlines the whole assign
+    expression tree into the scan Filters of both sides)."""
+    from hexscape_spark.hexgrid import kring_offsets_df
     _views(spark, sf_dir)
     ev = _assign_ckpt(spark, "events", "event_id",
                       "event_id, lon, lat, q, r")
     occ = _assign_ckpt(spark, "documents", "doc_id",
                        "q AS cq, r AS cr, cell_id", distinct=True,
                        spread=False)
-    use_gather = ev.count() >= _NN_GATHER_MIN_EVENTS
-    k = 3
-    offs = [(dq, dr) for dq in range(-k, k + 1) for dr in range(-k, k + 1)
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k]
-    offs_df = spark.createDataFrame(offs, "dq INT, dr INT")
     cx, cy = sqlgen.centroid_exprs("cq", "cr")
-    expd = (occ.crossJoin(offs_df)
+    expd = (occ.crossJoin(kring_offsets_df(spark, 3))
             .selectExpr("cq - dq AS kq", "cr - dr AS kr", "cell_id",
                         f"{cx} AS cx", f"{cy} AS cy"))
-    if use_gather:
-        return _nn_gather_best(ev, expd)
+    return ev, expd
+
+
+def _nn_struct_min_best(ev: DataFrame, expd: DataFrame) -> DataFrame:
+    """Struct-min argmin for the J8 nearest join: each event probes the
+    broadcast candidates once and a combinable MIN(struct(d, cell_id))
+    per event_id keeps the (d, cell_id)-lexicographic winner."""
     dist = F.sqrt(
         (F.col("lon") - F.col("cx")) * (F.col("lon") - F.col("cx")) +
         (F.col("lat") - F.col("cy")) * (F.col("lat") - F.col("cy")))
@@ -2044,9 +1985,7 @@ def _q_nearest_cell_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Measured crossover between the struct-min and array-gather argmin plans
 # (see _q_nearest_cell_knn): struct-min wins at 100k events (1.27 vs
 # 1.88 s), array-gather at 300k (1.92 vs 2.42 s) and 1M (2.54 vs 3.65 s).
-# Overridable for cluster profiles where the sort/fold balance differs.
-_NN_GATHER_MIN_EVENTS = int(os.environ.get(
-    "HEXSCAPE_NN_GATHER_MIN_EVENTS", "200000"))
+_NN_GATHER_MIN_EVENTS = 200_000
 
 
 def _nn_gather_best(ev: DataFrame, expd: DataFrame) -> DataFrame:
@@ -2056,7 +1995,12 @@ def _nn_gather_best(ev: DataFrame, expd: DataFrame) -> DataFrame:
     identical semantics to MIN(struct(d, c)) because struct ordering is
     field-order lexicographic and cell_ids are unique per array (a
     strict total order, so the fold result is independent of
-    collect_list's nondeterministic array order)."""
+    collect_list's nondeterministic array order).
+
+    Assumes `event_id` is unique in `ev`: this form emits one row per
+    event ROW, while the struct-min form groups by event_id, so a
+    repeated id would give one row per copy here and one row in total
+    there."""
     cand = (expd.groupBy("kq", "kr")
             .agg(F.collect_list(F.struct("cell_id", "cx", "cy"))
                  .alias("cs")))

@@ -31,7 +31,6 @@ import json
 
 import pandas as pd
 import os
-import sys
 import zipfile
 
 
@@ -108,7 +107,9 @@ def job_neighbours(spark, args) -> None:
 
 def job_dedup(spark, args) -> None:
     """Near-duplicate candidate pairs over a documents/pages parquet
-    (MinHash+LSH banding with the bucket cap).  The cap defaults ON here
+    (dedup.minhash_lsh_pairs: the md5-folded MinHash the minhash_pairs
+    contract query and its DuckDB oracle share, with LSH banding and the
+    bucket cap).  The cap defaults ON here
     (--max-bucket 10000, 0 disables): this is the production driver, and
     one degenerate boilerplate bucket of m members emits m²/2 pairs —
     r5 caught this job emitting 10M pairs from a 20k-doc corpus whose

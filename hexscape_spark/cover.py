@@ -183,16 +183,6 @@ def polygon_cell_cover(polys: DataFrame, hex_width: float = P.HEX_WIDTH,
     return polys.select(poly_id, geom).mapInPandas(run, schema=schema)
 
 
-def cover_join(points_with_cells: DataFrame, cover: DataFrame,
-               how: str = "inner") -> DataFrame:
-    """Points (already hex-assigned) x polygon cover: an equi-join on
-    cell_id that Catalyst shuffles, broadcasts, or AQE-skew-splits like any
-    relational join.  Exactness: a point is in the polygon iff it is in the
-    polygon's clipped piece within its own cell — for FULL cells this is
-    free; partial cells can be refined with a PIP check downstream."""
-    return points_with_cells.join(cover, on="cell_id", how=how)
-
-
 def pip_join(points_with_cells: DataFrame, cover: DataFrame,
              polys: DataFrame, point_x: str = "lon", point_y: str = "lat",
              poly_id: str = "poly_id", geom: str = "geom_wkb") -> DataFrame:

@@ -31,7 +31,6 @@ import numpy as np
 # --- WKB codecs --------------------------------------------------------------
 
 _WKB_POINT = 1
-_WKB_LINESTRING = 2
 _WKB_POLYGON = 3
 _WKB_MULTIPOLYGON = 6
 
@@ -51,10 +50,6 @@ def multipolygon_to_wkb(polys: list[list[np.ndarray]]) -> bytes:
     out = [b"\x01", struct.pack("<I", _WKB_MULTIPOLYGON), struct.pack("<I", len(polys))]
     out += [polygon_to_wkb(p) for p in polys]
     return b"".join(out)
-
-
-def point_to_wkb(x: float, y: float) -> bytes:
-    return b"\x01" + struct.pack("<I", _WKB_POINT) + struct.pack("<dd", x, y)
 
 
 def _read_ring(buf: memoryview, off: int) -> tuple[np.ndarray, int]:

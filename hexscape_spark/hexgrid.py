@@ -15,7 +15,6 @@ Reference parity:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import params as P
 from . import sqlgen
@@ -81,11 +80,6 @@ def kring_offsets_df(spark: SparkSession, k: int) -> DataFrame:
             if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k:
                 rows.append((dq, dr))
     return spark.createDataFrame(rows, "dq INT, dr INT")
-
-
-def with_hex_distance(df: DataFrame, q1: str, r1: str, q2: str, r2: str,
-                      out: str = "hex_dist") -> DataFrame:
-    return df.selectExpr("*", f"{sqlgen.hex_distance_expr(q1, r1, q2, r2)} AS {out}")
 
 
 def hex_vertices(q: int, r: int, hex_width: float = P.HEX_WIDTH,

@@ -24,10 +24,26 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.window import Window
 
+# Most rows a driver-side path here collects (as a dense matrix): the
+# query set of cosine_topk_bruteforce and the corpus of
+# cosine_topk_lsh(small_corpus=True).  Each collects at most one row more
+# and raises ValueError above it, so an oversized input fails fast
+# instead of filling the driver first.
+MAX_DRIVER_ROWS = 1_000_000
 
-from pyspark.sql.types import ArrayType, DoubleType  # noqa: E402
+
+def _collect_bounded(df: DataFrame, what: str) -> pd.DataFrame:
+    """`df` on the driver, or ValueError if it has more than
+    MAX_DRIVER_ROWS rows (`what` names the caller's contract)."""
+    pdf = df.limit(MAX_DRIVER_ROWS + 1).toPandas()
+    if len(pdf) > MAX_DRIVER_ROWS:
+        raise ValueError(
+            f"{what}: more than {MAX_DRIVER_ROWS} rows would collect to "
+            "the driver as a dense matrix")
+    return pdf
 
 
 def _stack(s: pd.Series) -> np.ndarray:
@@ -113,16 +129,11 @@ def cosine_topk_bruteforce(df: DataFrame, queries: DataFrame,
     k+1 slots for the self-pair), so the final global window reproduces
     the exact result under any partitioning."""
     sc = df.sparkSession.sparkContext
-    qpd = queries.select(F.col(key).alias("query_id"),
-                         F.col(vec).alias("qv")) \
-        .where(F.col(vec).isNotNull()).toPandas()
-    # ADVICE r06: the 'queries small' contract was unenforced — a huge
-    # query set silently OOMed the driver instead of failing fast
-    if len(qpd) > 1_000_000:
-        raise ValueError(
-            f"cosine_topk_bruteforce: {len(qpd)} query rows collect to the "
-            "driver as a dense matrix; this path requires a small query "
-            "set (use the corpus as df and the small side as queries)")
+    qpd = _collect_bounded(
+        queries.select(F.col(key).alias("query_id"), F.col(vec).alias("qv"))
+        .where(F.col(vec).isNotNull()),
+        "cosine_topk_bruteforce: this path requires a small query set (use "
+        "the corpus as df and the small side as queries)")
     dims = {len(v) for v in qpd["qv"]}
     if len(dims) > 1:
         raise ValueError(
@@ -173,21 +184,12 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return vals
 
 
-def with_lsh_bucket(df: DataFrame, vec: str = "embedding", planes: int = 12,
-                    dim: int = 64, out: str = "lsh_bucket",
-                    table: int = 0) -> DataFrame:
-    """Random-hyperplane sign sketch -> integer bucket id.  `table` selects
-    an independent plane set (OR-construction hash table)."""
-    return with_lsh_buckets(df, vec, planes, dim, tables=1,
-                            out_prefix=out, first_table=table,
-                            suffix=False)
-
-
 def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
-                     planes: int = 12, dim: int = 64, tables: int = 1,
-                     out_prefix: str = "__b", first_table: int = 0,
-                     suffix: bool = True) -> DataFrame:
-    """All `tables` sign-sketch buckets in ONE Arrow-vectorized pass.
+                     planes: int = 12, dim: int = 64,
+                     tables: int = 1) -> DataFrame:
+    """All `tables` sign-sketch buckets in ONE Arrow-vectorized pass,
+    as LONG columns `__b0` .. `__b{tables-1}` (table t uses its own
+    independent plane set — the OR-construction hash tables).
 
     planes x tables dot products per row are ONE numpy matmul per batch —
     measured ~1000x over the expression-tree alternatives (per-element
@@ -195,7 +197,7 @@ def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
     interpreted and boxed at ~8 ms/row for a 40x64 plane matrix).  The
     sign sketch is scale-invariant, so callers may pass raw or unit
     vectors."""
-    mat = np.array([_hyperplane(dim, (first_table + t) * 997 + p)
+    mat = np.array([_hyperplane(dim, t * 997 + p)
                     for t in range(tables) for p in range(planes)]).T
     pw = (2 ** np.arange(planes)).astype(np.int64)
     n_t, n_p = tables, planes
@@ -231,8 +233,7 @@ def with_lsh_buckets(df: DataFrame, vec: str = "embedding",
 
     df = df.withColumn("__bk", buckets_udf(F.col(vec)))
     for t in range(tables):
-        name = f"{out_prefix}{t}" if suffix else out_prefix
-        df = df.withColumn(name, F.element_at("__bk", t + 1))
+        df = df.withColumn(f"__b{t}", F.element_at("__bk", t + 1))
     return df.drop("__bk")
 
 
@@ -428,7 +429,9 @@ def cosine_topk_lsh(df: DataFrame, key: str = "vec_id",
         # is the identical arithmetic _dot_arrow runs on the joined
         # arrays, so the cosines are bit-identical.
         sc = df.sparkSession.sparkContext
-        vp = b.select(F.col(key), F.col("unit_vec")).toPandas()
+        vp = _collect_bounded(
+            b.select(F.col(key), F.col("unit_vec")),
+            "cosine_topk_lsh(small_corpus=True): the corpus must be small")
         ids = vp[key].to_numpy()
         order = np.argsort(ids, kind="stable")
         mat = np.array([np.asarray(v, dtype=np.float64)

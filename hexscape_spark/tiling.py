@@ -13,8 +13,9 @@ The Spark-first reimplementation of the reference's central query,
     -> LU_* wide columns + Σ==1 checksum       (R/generate_patches.R:334-355)
 
 Scale notes: the lattice + clip is a single map-only stage (no shuffle);
-polygon layers are broadcast when small (the reference's regime) — the
-cell-cover equi-join path for continent-scale layers lives in cover_join().
+polygon layers are broadcast when small (the reference's regime) — for
+continent-scale layers, cover.polygon_cell_cover gives a cell-cover
+relation that joins on cell_id.
 All geometry math is geo.py NumPy over WKB; nothing is per-row Python.
 
 Split patches (one (q,r) cell cut into disconnected pieces by the

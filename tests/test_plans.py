@@ -179,26 +179,16 @@ def test_nearest_cell_gather_form_identical(spark):
     nearest join switches from MIN(struct) (partial SortAggregate over
     the full candidate fan-out) to a per-probe-key candidate array +
     array_min gather.  The two forms must be row-identical — the gather
-    plan must also contain NO aggregate over the fan-out and NO window."""
+    plan must also contain NO aggregate over the fan-out and NO window.
+    Both forms are built directly from the shared inputs, so the gate's
+    threshold cannot make the test compare one form with itself."""
     from pyspark.sql import functions as F
-    from hexscape_spark import sqlgen
 
-    m._views(spark, SF)
-    ev = m._assign_ckpt(spark, "events", "event_id",
-                        "event_id, lon, lat, q, r")
-    occ = m._assign_ckpt(spark, "documents", "doc_id",
-                         "q AS cq, r AS cr, cell_id", distinct=True,
-                         spread=False)
-    k = 3
-    offs = [(dq, dr) for dq in range(-k, k + 1) for dr in range(-k, k + 1)
-            if (abs(dq) + abs(dr) + abs(dq + dr)) // 2 <= k]
-    offs_df = spark.createDataFrame(offs, "dq INT, dr INT")
-    cx, cy = sqlgen.centroid_exprs("cq", "cr")
-    expd = (occ.crossJoin(offs_df)
-            .selectExpr("cq - dq AS kq", "cr - dr AS kr", "cell_id",
-                        f"{cx} AS cx", f"{cy} AS cy"))
+    ev, expd = m._nn_inputs(spark, SF)
+    # the gather form's precondition (see _nn_gather_best)
+    assert ev.select(F.countDistinct("event_id")).first()[0] == ev.count()
     gather = m._nn_gather_best(ev, expd)
-    base = m.queries()["hex_nearest_cell"](spark, SF)  # struct-min at sf0.01
+    base = m._nn_struct_min_best(ev, expd)
     assert gather.exceptAll(base).count() == 0
     assert base.exceptAll(gather).count() == 0
     plan = _plan(gather)

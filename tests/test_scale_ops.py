@@ -86,41 +86,6 @@ def test_knn_library_matches_shared_sql(spark):
     assert (lib.dist_r.values == sql_res.dist_r.values).all()
 
 
-def test_knn_escalating_matches_flat(spark):
-    """nearest_cells_escalating (the 100x-scale bounded-fan-out path) ==
-    the flat-disk shared-SQL result, including tie-breaks — the
-    acceptance bound is proven, this pins the implementation.  Also
-    asserts the escalation actually short-circuits most points at
-    stage 1 (the design's premise for a dense corpus)."""
-    import __spark_entry__ as m
-    from hexscape_spark.knn import nearest_cells_escalating
-    sf = "/root/testdata/sf0.01"
-    m._views(spark, sf)
-    sql_res = spark.sql(m._sql_hex_nearest_cell()).toPandas() \
-        .sort_values("event_id").reset_index(drop=True)
-    ev = spark.sql(sqlgen.assign_sql("events", "event_id")) \
-        .withColumnRenamed("event_id", "point_id").persist()
-    docs = spark.sql(sqlgen.assign_sql("documents", "doc_id"))
-    try:
-        esc = nearest_cells_escalating(ev, docs.select("q", "r", "cell_id"),
-                                       k_ring=3, first_ring=1)
-        lib = esc.withColumn("dist_r", F.round("dist", 6)).toPandas() \
-            .sort_values("point_id").reset_index(drop=True)
-        assert len(lib) == len(sql_res)
-        assert (lib.point_id.values == sql_res.event_id.values).all()
-        assert (lib.nn_cell_id.values == sql_res.nn_cell_id.values).all()
-        assert (lib.dist_r.values == sql_res.dist_r.values).all()
-        # the premise: stage 1 (ring<=1, 7 offsets) settles the majority
-        import math as _math
-        from hexscape_spark import params as _P
-        bound = 2 * (_math.sqrt(3.0) / 2.0) * _P.HEX_WIDTH - 1e-6
-        n_total = len(lib)
-        n_esc = (lib.dist_r.values >= bound - _P.hex_height() / 2.0).sum()
-        assert n_esc < 0.5 * n_total
-    finally:
-        ev.unpersist()
-
-
 def test_streaming_equals_batch(spark):
     """The streaming rollup over availableNow == the batch plan on the
     same files (one code path for the hex math)."""
@@ -406,6 +371,34 @@ def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
     assert out.count() == 0
 
 
+def _vectors(spark, n):
+    rows = [(i, [1.0, float(i), 0.5, -float(i % 3)]) for i in range(n)]
+    return spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+
+
+def test_bruteforce_query_collect_is_bounded(spark, monkeypatch):
+    """The query matrix cosine_topk_bruteforce collects is capped at
+    MAX_DRIVER_ROWS: one row more raises, the bound itself runs."""
+    from hexscape_spark import similarity
+    monkeypatch.setattr(similarity, "MAX_DRIVER_ROWS", 5)
+    df = _vectors(spark, 12)
+    top = similarity.cosine_topk_bruteforce(df, df.where("vec_id < 5"), k=2)
+    assert top.count() == 10
+    with pytest.raises(ValueError, match="small query set"):
+        similarity.cosine_topk_bruteforce(df, df.where("vec_id < 6"), k=2)
+
+
+def test_lsh_small_corpus_collect_is_bounded(spark, monkeypatch):
+    """cosine_topk_lsh(small_corpus=True) gathers the whole unit-vector
+    corpus on the driver: above MAX_DRIVER_ROWS it raises instead."""
+    from hexscape_spark import similarity
+    monkeypatch.setattr(similarity, "MAX_DRIVER_ROWS", 5)
+    kw = dict(k=1, planes=2, dim=4, tables=1, small_corpus=True)
+    assert similarity.cosine_topk_lsh(_vectors(spark, 5), **kw).count() > 0
+    with pytest.raises(ValueError, match="corpus must be small"):
+        similarity.cosine_topk_lsh(_vectors(spark, 6), **kw)
+
+
 def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
     """Same cap on the MinHash banding path: thousands of identical docs
     (an exact-dup cluster) never reach the pair join."""
@@ -454,7 +447,7 @@ def test_csv_dimension_roundtrip(spark, tmp_path):
 
 def test_dedup_variants_find_planted_near_dups(spark):
     """Plant near-duplicates; MinHash-LSH + exact Jaccard must find them."""
-    from hexscape_spark.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
+    from hexscape_spark.dedup import ngram_jaccard_pairs
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "while the spark engine shuffles rows across many partitions")
     rows = []
